@@ -2373,8 +2373,7 @@ def stat_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.coalesce(F.col("cents"), F.lit(0).cast(d38))
                     .alias("cents")))
     return (spearman_rho_from(base, part_col="c_nationkey",
-                              x_col="c_acctbal", y_col="cents",
-                              tie_break="c_custkey")
+                              x_col="c_acctbal", y_col="cents")
             .select(F.col("c_nationkey").alias("nationkey"),
                     F.col("n_rows").alias("n_customers"),
                     "spearman_rho")
@@ -2382,7 +2381,7 @@ def stat_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def spearman_rho_from(df: DataFrame, part_col: str, x_col: str,
-                      y_col: str, tie_break: str,
+                      y_col: str,
                       num_partitions: int | None = None) -> DataFrame:
     """The per-group Spearman core on an arbitrary frame — split out so
     property tests can drive it with randomized tie-heavy samples
@@ -2407,10 +2406,9 @@ def spearman_rho_from(df: DataFrame, part_col: str, x_col: str,
     the randomized-ties property test). The prefix scan's internal
     window partitions by ``__pid`` — the range-partition id, shuffle-
     width cardinality — never by a data key, the same sanctioned
-    primitive the fulfillment-latency census rides (r12). ``tie_break``
-    is retained for caller compatibility: tie-averaged ranks are
-    tie-order invariant by construction, so the census derivation needs
-    no row-level tie-break at all.
+    primitive the fulfillment-latency census rides (r12). Tie-averaged
+    ranks are tie-order invariant by construction, so the census
+    derivation needs no row-level tie-break at all.
 
     Census rows join back on STRUCT-packed keys (r12, nullfact gate): a
     plain [part, value] equi-join silently drops a NULL group key,

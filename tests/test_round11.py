@@ -11,7 +11,6 @@
    each now hash-matching DuckDB on the corrupted corpus.
 """
 
-import json
 import os
 
 import duckdb
@@ -121,52 +120,6 @@ class TestNulldocSemanticsUnits:
                   .join(ns.withColumn("__k", F.struct("k")).drop("k"),
                         "__k"))
         assert packed.count() == 2             # NULL group kept
-
-
-class TestRound11Window:
-    def test_window_executes_recorded_rotation(self):
-        """First 50 queries() keys == _ROUND11_NEW debuts (zero — fourth
-        consecutive debut-freeze), then the recorded due list: the 42
-        unreached r05-checked entries (starting corpus_chunk_overlap),
-        then the r06-checked block in its exact CORRECTNESS_r06.json
-        order, filling to 50 — the r10 verdict's task 1."""
-        from db2ice_db2_to_snowflake_iceberg_ddl_converter_spark.registry import (
-            _CANARIES_R10,
-            _CANARIES_R11,
-            _R05_CHECKED,
-            _R06_CHECKED,
-            _ROUND10_NEW,
-            _ROUND11_NEW,
-            _window_r11,
-            build_oracles,
-            build_queries,
-        )
-
-        q = build_queries()
-        w = _window_r11()
-        # r12 reordered queries() to ITS window; the r11 window remains
-        # a resolvable, construction-exact subset (the r9/r10 pattern)
-        assert set(w) <= set(q)
-        assert len(w) == 50 and len(set(w)) == 50
-        # due-list construction arithmetic (the judge re-derives this)
-        assert _CANARIES_R11 == [
-            *_CANARIES_R10[50 - len(_ROUND10_NEW):], *_R06_CHECKED]
-        assert w == [*_ROUND11_NEW,
-                     *_CANARIES_R11[:50 - len(_ROUND11_NEW)]]
-        # the due tail is exactly the unreached r05 block
-        assert w[:42] == _R05_CHECKED[8:]
-        assert w[0] == "corpus_chunk_overlap"
-        assert w[42:] == _R06_CHECKED[:8]
-        # the r06 block is exactly the CORRECTNESS_r06.json window order
-        assert _R06_CHECKED == list(json.load(open("CORRECTNESS_r06.json")))
-        # none of the r06 keys was re-checked in a later window (r07-r10)
-        later = set()
-        for r in (7, 8, 9, 10):
-            later |= set(json.load(open(f"CORRECTNESS_r{r:02d}.json")))
-        assert not later & set(_R06_CHECKED)
-        # every window entry resolves with an oracle twin
-        o = build_oracles()
-        assert all(k in q and k in o for k in w)
 
 
 class TestAdviceClosuresR11:
@@ -326,28 +279,33 @@ class TestDrainStatePartitions:
             suggest_state_partitions,
         )
 
-        # the sf0.001/0.01/0.1 fixtures are all < 64 MiB -> the floor
-        assert suggest_state_partitions(spark, sf_dir) == 8
-        # missing source (non-local storage shape) -> session default
-        default = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        assert suggest_state_partitions(
-            spark, str(tmp_path / "nope")) == default
-        # a synthetic big file caps at the session default, never above
-        big = tmp_path / "events.parquet"
-        big.write_bytes(b"\0" * (9 << 20))           # 9 MiB -> ceil = 2
-        assert suggest_state_partitions(spark, str(tmp_path)) == 8
-        with open(big, "wb") as fh:
-            fh.truncate((8 << 20) * (default + 5))   # default+5 ceil
-        assert suggest_state_partitions(spark, str(tmp_path)) == default
-        # the cap must hold even BELOW the floor: a session width of 4
-        # stays 4 — the helper never widens (r11 review find)
+        # a session width above the floor, whatever the host's core
+        # count, so the floor of 8 is what these assertions exercise
         key = "spark.sql.shuffle.partitions"
-        old = spark.conf.get(key)
+        session = spark.conf.get(key)
         try:
+            spark.conf.set(key, "32")
+            # the sf0.001/0.01/0.1 fixtures are all < 64 MiB -> the floor
+            assert suggest_state_partitions(spark, sf_dir) == 8
+            # missing source (non-local storage shape) -> session default
+            default = int(spark.conf.get(key))
+            assert suggest_state_partitions(
+                spark, str(tmp_path / "nope")) == default
+            # a synthetic big file caps at the session default, never
+            # above
+            big = tmp_path / "events.parquet"
+            big.write_bytes(b"\0" * (9 << 20))       # 9 MiB -> ceil = 2
+            assert suggest_state_partitions(spark, str(tmp_path)) == 8
+            with open(big, "wb") as fh:
+                fh.truncate((8 << 20) * (default + 5))  # default+5 ceil
+            assert suggest_state_partitions(
+                spark, str(tmp_path)) == default
+            # the cap must hold even BELOW the floor: a session width of
+            # 4 stays 4 — the helper never widens (r11 review find)
             spark.conf.set(key, "4")
             assert suggest_state_partitions(spark, str(tmp_path)) == 4
         finally:
-            spark.conf.set(key, old)
+            spark.conf.set(key, session)
 
     def test_drain_conf_restores_session_setting(self, spark, sf_dir):
         from db2ice_db2_to_snowflake_iceberg_ddl_converter_spark.streaming.events import (  # noqa: E501
@@ -355,15 +313,22 @@ class TestDrainStatePartitions:
         )
 
         key = "spark.sql.shuffle.partitions"
-        before = spark.conf.get(key)
-        with drain_conf(spark, sf_dir):
-            assert spark.conf.get(key) == "8"
-        assert spark.conf.get(key) == before
-        # restore happens on the exception path too
-        with pytest.raises(RuntimeError, match="boom"):
+        session = spark.conf.get(key)
+        try:
+            # a session width above the floor, whatever the host's core
+            # count, so the drain narrows to the floor of 8
+            spark.conf.set(key, "32")
+            before = spark.conf.get(key)
             with drain_conf(spark, sf_dir):
-                raise RuntimeError("boom")
-        assert spark.conf.get(key) == before
+                assert spark.conf.get(key) == "8"
+            assert spark.conf.get(key) == before
+            # restore happens on the exception path too
+            with pytest.raises(RuntimeError, match="boom"):
+                with drain_conf(spark, sf_dir):
+                    raise RuntimeError("boom")
+            assert spark.conf.get(key) == before
+        finally:
+            spark.conf.set(key, session)
 
 
 class TestCollisionBranchExactnessResidue:

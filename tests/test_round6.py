@@ -211,38 +211,6 @@ class TestRegistryGuard:
         with pytest.raises(ValueError, match="collision"):
             d.update({"x": 3})
 
-    def test_window_is_first_50_and_all_resolvable(self):
-        """Round-10 rotation superseded the r9 window (each round's
-        membership assertion lives on in its own twin as history): here
-        keep the invariants that outlive rotations — the first 50 keys
-        ARE the current window, unique, and every r6 debut stays
-        resolvable with its oracle."""
-        from db2ice_db2_to_snowflake_iceberg_ddl_converter_spark.registry import (
-            _CANARIES_R06,
-            _ROUND6_NEW,
-            _window_r12,
-            build_oracles,
-            build_queries,
-        )
-
-        q = build_queries()
-        w = _window_r12()
-        assert list(q)[:50] == w
-        assert len(w) == 50
-        assert len(set(w)) == 50
-        # every canary exists and no round-6 debut is missing an oracle
-        # unless deliberately rows-only (the float-iterative /
-        # binary-decode group; the sketch entries went partial-oracle in
-        # round 8, graph_kcore / events_holt_linear in round 9)
-        rows_only = {"ann_ivf_pq_topk", "embedding_kmeans_clusters",
-                     "multimodal_audio_energy",
-                     "multimodal_image_stats"}
-        o = build_oracles()
-        assert all(k in q for k in _CANARIES_R06)
-        for k in _ROUND6_NEW:
-            assert k in q
-            assert k in o or k in rows_only
-
 
 class TestPersistReplacesCheckpoint:
     """Round-6 resilience pass: the five corpus-sized shingle/fingerprint

@@ -343,43 +343,6 @@ DISTRIBUTE BY HASH (SALE_ID);
         assert not os.path.exists(dest)
 
 
-class TestRound7Window:
-    def test_window_executes_recorded_rotation(self):
-        """Historical pin (round-8 rotation superseded the first-50
-        placement; the r8 twin in test_round8.py owns that now): the r7
-        window COMPOSITION stays _ROUND7_NEW debuts, then ALL 27
-        never-driver-checked late-r6 entries, then the recorded stale
-        canaries filling to 50 — the r6 verdict's top ask — and every r7
-        debut stays resolvable with its oracle."""
-        import json
-
-        from db2ice_db2_to_snowflake_iceberg_ddl_converter_spark.registry import (
-            _CANARIES_R07,
-            _ROUND6_LATE,
-            _ROUND7_NEW,
-            _window_r07,
-            build_oracles,
-            build_queries,
-        )
-
-        q = build_queries()
-        w = _window_r07()
-        assert len(set(w)) == 50
-        assert all(k in q for k in w)
-        fill = 50 - len(_ROUND7_NEW) - len(_ROUND6_LATE)
-        assert w == [*_ROUND7_NEW, *_ROUND6_LATE, *_CANARIES_R07[:fill]]
-        o = build_oracles()
-        for k in _ROUND7_NEW:           # every r7 debut is oracle-backed
-            assert k in q and k in o
-        # cumulative driver coverage was completed by the r7 window:
-        # every entry not in it already has a CORRECTNESS row r01-r06
-        seen = set()
-        for r in range(1, 7):
-            seen |= set(json.load(open(f"CORRECTNESS_r0{r}.json")))
-        never = [k for k in q if k not in seen and k not in w]
-        assert never == []
-
-
 class TestRankStatistics:
     def test_spearman_matches_pure_python(self, spark, sf_dir):
         """Exact tie-averaged Spearman for one nation replayed in pure
@@ -668,7 +631,7 @@ class TestRankStatsProperties:
                 [("k", i, x, y) for i, (x, y) in enumerate(xy)],
                 "p string, i long, x double, y double")
             r = spearman_rho_from(df, part_col="p", x_col="x",
-                                  y_col="y", tie_break="i").collect()[0]
+                                  y_col="y").collect()[0]
             rx, ry = avg_ranks(xs), avg_ranks(ys)
             n = len(xy)
             mean = (n + 1) / 2
@@ -900,7 +863,7 @@ class TestDegenerateInputsReturnNull:
         constx = spark.createDataFrame(
             [("k", 1, 1.0, 5.0), ("k", 2, 1.0, 6.0)],
             "p string, i long, x double, y double")
-        assert spearman_rho_from(constx, "p", "x", "y", "i") \
+        assert spearman_rho_from(constx, "p", "x", "y") \
             .collect()[0].spearman_rho is None
 
         cells = spark.createDataFrame(

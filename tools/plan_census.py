@@ -4,7 +4,7 @@
 For each ``queries()`` entry, plans the DataFrame (no execution) and
 records the operator counts the optimization guide says to audit
 (§7.2): Exchange nodes, join strategies, Python-boundary nodes
-(BatchEvalPython / ArrowEvalPython / MapInArrow / MapInPandas /
+(BatchEvalPython[UDTF] / ArrowEvalPython[UDTF] / MapInArrow / MapInPandas /
 FlatMapGroupsInPandas), cartesian products, single-partition windows /
 sorts, and whether the parquet scans carry PushedFilters.
 
@@ -36,8 +36,10 @@ def census(text: str) -> dict:
         "shj": len(re.findall(r"\bShuffledHashJoin\b", text)),
         "bnlj": len(re.findall(r"\bBroadcastNestedLoopJoin\b", text)),
         "cartesian": len(re.findall(r"\bCartesianProduct\b", text)),
-        "batch_eval_python": len(re.findall(r"\bBatchEvalPython\b", text)),
-        "arrow_eval_python": len(re.findall(r"\bArrowEvalPython\b", text)),
+        "batch_eval_python": len(re.findall(
+            r"\bBatchEvalPython(?:UDTF)?\b", text)),
+        "arrow_eval_python": len(re.findall(
+            r"\bArrowEvalPython(?:UDTF)?\b", text)),
         "map_in_arrow_pandas": len(re.findall(
             r"\bMapInArrow\b|\bMapInPandas\b|\bPythonMapInArrow\b", text)),
         "flatmap_groups_pandas": len(re.findall(
